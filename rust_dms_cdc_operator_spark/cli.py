@@ -195,6 +195,16 @@ def run_query(args) -> int:
     return 0
 
 
+def _report_failures(results: dict, phase: str, err) -> None:
+    """Record a partial failure's per-table errors under
+    ``<phase>_failures`` and print each failed table on stderr."""
+    results[f"{phase}_failures"] = {
+        t: f"{type(exc).__name__}: {exc}" for t, exc in err.failures.items()
+    }
+    for t, exc in sorted(err.failures.items()):
+        print(f"error: {phase} of table {t} failed: {exc}", file=sys.stderr)
+
+
 def main(argv: list[str] | None = None) -> int:
     args = build_parser().parse_args(argv)
     if args.command is None:
@@ -233,7 +243,7 @@ def main(argv: list[str] | None = None) -> int:
     pks = json.loads(args.primary_keys)
 
     results: dict = {}
-    snapshot_rc = 0
+    rc = 0
     if not args.only_datadiff:
         from rust_dms_cdc_operator_spark.snapshot import (  # noqa: PLC0415
             ParquetTarget,
@@ -262,19 +272,16 @@ def main(argv: list[str] | None = None) -> int:
             # report every failed table, keep the committed results
             # (they validate below), exit non-zero at the end
             results["snapshot"] = e.results
-            results["snapshot_failures"] = {
-                t: f"{type(exc).__name__}: {exc}"
-                for t, exc in e.failures.items()
-            }
-            for t, exc in sorted(e.failures.items()):
-                print(f"error: snapshot of table {t} failed: {exc}",
-                      file=sys.stderr)
-            snapshot_rc = 1
+            _report_failures(results, "snapshot", e)
+            rc = 1
 
     if not args.only_snapshot and args.target_parquet_root and (
         args.local_root or args.source_jdbc_url
     ):
-        from rust_dms_cdc_operator_spark.validate import validate  # noqa: PLC0415
+        from rust_dms_cdc_operator_spark.validate import (  # noqa: PLC0415
+            ValidatePartialFailure,
+            validate,
+        )
 
         vp = CdcValidatePayload(
             schema_name=args.database_schema,
@@ -284,42 +291,49 @@ def main(argv: list[str] | None = None) -> int:
             start_position=args.start_position,
             max_connections=args.max_connections,
         )
-        if args.source_jdbc_url:
-            # the reference's primary validate shape: live source DB vs
-            # the engine's state tables — catalog-driven (S15+S14),
-            # source scans PK-partitioned (jdbc_source.py)
-            from rust_dms_cdc_operator_spark import fsio  # noqa: PLC0415
-            from rust_dms_cdc_operator_spark.sources.catalog import (  # noqa: PLC0415
-                get_primary_key,
-            )
-            from rust_dms_cdc_operator_spark.sources.jdbc_source import (  # noqa: PLC0415
-                catalog_validate,
-            )
+        try:
+            if args.source_jdbc_url:
+                # the reference's primary validate shape: live source DB vs
+                # the engine's state tables — catalog-driven (S15+S14),
+                # source scans PK-partitioned (jdbc_source.py)
+                from rust_dms_cdc_operator_spark import fsio  # noqa: PLC0415
+                from rust_dms_cdc_operator_spark.sources.catalog import (  # noqa: PLC0415
+                    get_primary_key,
+                )
+                from rust_dms_cdc_operator_spark.sources.jdbc_source import (  # noqa: PLC0415
+                    catalog_validate,
+                )
 
-            props = json.loads(args.jdbc_properties)
-            state_base = fsio.join(
-                args.target_parquet_root, args.database_schema
-            )
-            targets = {
-                t: spark.read.parquet(fsio.join(state_base, t))
-                for t in fsio.listdir_dirs(state_base)
-            }
+                props = json.loads(args.jdbc_properties)
+                state_base = fsio.join(
+                    args.target_parquet_root, args.database_schema
+                )
+                targets = {
+                    t: spark.read.parquet(fsio.join(state_base, t))
+                    for t in fsio.listdir_dirs(state_base)
+                }
 
-            def resolve_pk(s, u, sc, t, p):  # CLI map wins, catalog fallback
-                return pks.get(t) or get_primary_key(s, u, sc, t, p)
+                def resolve_pk(s, u, sc, t, p):  # CLI map wins, catalog fallback
+                    return pks.get(t) or get_primary_key(s, u, sc, t, p)
 
-            reports = catalog_validate(
-                spark, args.source_jdbc_url, args.database_schema,
-                targets, properties=props, payload=vp,
-                pk_resolver=resolve_pk,
-            )
-        else:
-            tables = {}
-            for t, path in results.get("snapshot", {}).items():
-                # self-check: replayed state vs what was just written
-                tgt = spark.read.parquet(path)
-                tables[t] = (tgt, tgt, pks.get(t, []))
-            reports = validate(spark, vp, tables)
+                reports = catalog_validate(
+                    spark, args.source_jdbc_url, args.database_schema,
+                    targets, properties=props, payload=vp,
+                    pk_resolver=resolve_pk,
+                )
+            else:
+                tables = {}
+                for t, path in results.get("snapshot", {}).items():
+                    # self-check: replayed state vs what was just written
+                    tgt = spark.read.parquet(path)
+                    tables[t] = (tgt, tgt, pks.get(t, []))
+                reports = validate(spark, vp, tables)
+        except ValidatePartialFailure as e:
+            # same shape as a partial snapshot: keep the finished
+            # reports, report every failed table, exit non-zero
+            reports = e.results
+            _report_failures(results, "validate", e)
+            rc = 1
         results["validate"] = {
             t: {"source_rows": r.source_rows, "target_rows": r.target_rows,
                 "ok": r.ok}
@@ -327,7 +341,7 @@ def main(argv: list[str] | None = None) -> int:
         }
 
     print(json.dumps(results, indent=2, default=str))
-    return snapshot_rc
+    return rc
 
 
 if __name__ == "__main__":

@@ -2,10 +2,10 @@
 schema from its DMS S3 drop and write it to a target.
 
 The reference fans out one async future per table with
-``buffer_unordered(80)`` (cdc_operator.rs:57-249); here each table is
-one Spark job submitted from a thread pool under a FAIR scheduler
-pool, so tables share the cluster instead of queueing FIFO. The
-per-table pipeline is the single-scan replay of
+``buffer_unordered(80)`` (cdc_operator.rs:57-249); here every table
+runs through :func:`fanout.per_table`, one thread per table under its
+own FAIR scheduler pool, so tables share the cluster instead of
+queueing FIFO. The per-table pipeline is the single-scan replay of
 ``operators.compact.replay_manifest`` — not per-file loops.
 
 Targets: ``ParquetTarget`` (local/lake state tables — fully testable
@@ -15,20 +15,18 @@ here) or ``sinks.postgres.PostgresSink`` (JDBC; gated on a driver).
 from __future__ import annotations
 
 import threading
-from concurrent.futures import ThreadPoolExecutor, as_completed
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
 from rust_dms_cdc_operator_spark import fsio
+from rust_dms_cdc_operator_spark.fanout import NUM_OF_BUFFERS, PartialFailure, per_table
 from rust_dms_cdc_operator_spark.operators.compact import replay_manifest
 from rust_dms_cdc_operator_spark.payloads import CdcSnapshotPayload, TableMode
 from rust_dms_cdc_operator_spark.sources.manifest import build_manifest
 
-NUM_OF_BUFFERS = 80  # reference per-table concurrency default
 
-
-class SnapshotPartialFailure(RuntimeError):
+class SnapshotPartialFailure(PartialFailure):
     """One or more tables failed while the REST COMPLETED AND
     COMMITTED — the reference's ``buffer_unordered`` drain semantics
     (cdc_operator.rs:244-249: ``stream.for_each`` drives every
@@ -37,16 +35,7 @@ class SnapshotPartialFailure(RuntimeError):
     committed table→path map, ``failures`` the per-table exceptions,
     so a caller can retry exactly the failed subset."""
 
-    def __init__(self, results: dict[str, str], failures: dict[str, Exception]):
-        self.results = results
-        self.failures = failures
-        msg = "; ".join(
-            f"{t}: {type(e).__name__}: {e}" for t, e in sorted(failures.items())
-        )
-        super().__init__(
-            f"{len(failures)} table(s) failed ({msg}); "
-            f"{len(results)} table(s) committed"
-        )
+    finished = "committed"
 
 
 @dataclass
@@ -138,10 +127,10 @@ def snapshot(
     pks = primary_keys or {}
     # FAIR scheduling must be set at session build time
     # (get_spark(extra_conf={"spark.scheduler.mode": "FAIR"})); the
-    # per-thread pool below is a no-op under FIFO, correct either way
+    # per-table pools of the fan-out are a no-op under FIFO, correct
+    # either way
 
-    def one_table(table: str) -> tuple[str, str]:
-        spark.sparkContext.setLocalProperty("spark.scheduler.pool", f"tbl-{table}")
+    def one_table(table: str) -> str:
         manifest = build_manifest(
             mode=payload.mode,
             root=root,
@@ -153,27 +142,11 @@ def snapshot(
             stop_date=payload.stop_date,
         )
         state = replay_manifest(spark, root, manifest, pks.get(table, []))
-        path = target.write(state, payload.schema_name, table, pks.get(table, []))
-        return table, path
+        return target.write(state, payload.schema_name, table, pks.get(table, []))
 
-    # buffer_unordered drain semantics (cdc_operator.rs:244-249): every
-    # table's future runs to completion whatever happens to its
-    # siblings — a missing prefix or mid-replay error on ONE table
-    # must not abort (or roll back) the others. pool.map would stop
-    # yielding at the first exception; submit + as_completed collects
-    # every outcome, then reports failures together.
-    results: dict[str, str] = {}
-    failures: dict[str, Exception] = {}
-    workers = max(1, min(max_parallel_tables, len(tables) or 1))
-    with ThreadPoolExecutor(max_workers=workers) as pool:
-        futures = {pool.submit(one_table, t): t for t in tables}
-        for fut in as_completed(futures):
-            t = futures[fut]
-            try:
-                table, path = fut.result()
-                results[table] = path
-            except Exception as exc:  # noqa: BLE001 — per-table isolation
-                failures[t] = exc
+    # a missing prefix or mid-replay error on ONE table must not abort
+    # (or roll back) the others: failures are reported together
+    results, failures = per_table(spark, tables, one_table, max_parallel_tables)
     if failures:
         raise SnapshotPartialFailure(results, failures)
     return results
@@ -190,6 +163,13 @@ def resume_snapshot(
     """Incremental re-run: apply only the CDC files newer than
     ``since`` onto each table's EXISTING state — a re-run costs
     O(new events + touched state), never a full LOAD+CDC re-replay.
+
+    Tables run concurrently through the same per-table fan-out as
+    :func:`snapshot` (default width, capped at the table count). Every
+    table heals, merges and commits whatever happens to its siblings;
+    failures then raise :class:`SnapshotPartialFailure` carrying the
+    committed tables and the per-table exceptions. A failed table keeps
+    its previous live state.
 
     Discovery reuses the DATE_AWARE window (exclusive ``since`` bound,
     reference semantics) but drops LOAD files: the state on disk
@@ -219,8 +199,8 @@ def resume_snapshot(
             root, payload.database_name, payload.schema_name, payload.s3_prefix
         ),
     )
-    results: dict[str, str] = {}
-    for table in tables:
+
+    def one_table(table: str) -> str | None:
         files = build_manifest(
             mode="date-aware",
             root=root,
@@ -245,7 +225,7 @@ def resume_snapshot(
         fsio.delete(tmp)
         cdc_files = [f for f in files if not f.is_load_file()]
         if not cdc_files:
-            continue
+            return None
         cdc = read_manifest(spark, root, cdc_files)
         state = spark.read.parquet(path)
         merged = merge_full_load_with_cdc(state, cdc, pks.get(table, []))
@@ -255,5 +235,10 @@ def resume_snapshot(
         fsio.rename(path, old)
         fsio.rename(tmp, path)
         fsio.delete(old)
-        results[table] = path
+        return path
+
+    done, failures = per_table(spark, tables, one_table)
+    results = {t: p for t, p in done.items() if p is not None}
+    if failures:
+        raise SnapshotPartialFailure(results, failures)
     return results

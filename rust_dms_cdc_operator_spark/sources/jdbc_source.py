@@ -25,7 +25,11 @@ from rust_dms_cdc_operator_spark.sources.catalog import (
     get_primary_key,
     get_tables_in_schema,
 )
-from rust_dms_cdc_operator_spark.validate import TableReport, validate
+from rust_dms_cdc_operator_spark.validate import (
+    TableReport,
+    tables_in_flight,
+    validate,
+)
 
 
 def partition_bounds_sql(schema: str, table: str, column: str) -> str:
@@ -75,6 +79,17 @@ def read_table_partitioned(
     return spark.read.jdbc(url, qualify(schema, table), properties=props)
 
 
+def scan_widths(
+    max_connections: int, n_tables: int, num_partitions: int
+) -> tuple[int, int]:
+    """(tables in flight, partitions per table scan) for a catalog
+    validate of ``n_tables`` tables: ``validate``'s own width, and the
+    requested scan fan-out cut down so that their product stays within
+    the reference's ``max_connections`` pool (postgres_config.rs:54-82)."""
+    in_flight = tables_in_flight(max_connections, n_tables)
+    return in_flight, max(1, min(num_partitions, max_connections // in_flight))
+
+
 def catalog_validate(
     spark: SparkSession,
     url: str,
@@ -97,13 +112,13 @@ def catalog_validate(
     second database, …); tables discovered in the schema but absent
     from ``targets`` are skipped — the payload's include/exclude
     filtering inside ``validate`` handles deliberate exclusions.
+
+    ``validate`` runs the tables concurrently, so the requested
+    ``num_partitions`` is cut to keep every scan in flight within
+    ``payload.max_connections`` (:func:`scan_widths`).
     """
     props = properties or {}
     payload = payload or CdcValidatePayload(schema_name=schema)
-    # the reference sizes its connection pool from the payload's
-    # max_connections (postgres_config.rs:54-82): cap the per-table
-    # scan fan-out the same way
-    num_partitions = max(1, min(num_partitions, payload.max_connections))
     discovered = get_tables_in_schema(
         spark,
         url,
@@ -112,10 +127,14 @@ def catalog_validate(
         excluded=tuple(payload.excluded_tables or ()),
         properties=props,
     )
+    names = [t for t in discovered if t in targets]
+    # concurrent tables share one connection budget: (tables in
+    # flight) x (partitions per scan) <= payload.max_connections
+    _, num_partitions = scan_widths(
+        payload.max_connections, len(names), num_partitions
+    )
     tables: dict[str, tuple[DataFrame, DataFrame, list[str]]] = {}
-    for t in discovered:
-        if t not in targets:
-            continue
+    for t in names:
         pk = pk_resolver(spark, url, schema, t, props) or (
             (target_pks or {}).get(t, [])
         )

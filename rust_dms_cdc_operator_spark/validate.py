@@ -1,10 +1,14 @@
 """Validate orchestration (SURVEY §3.2): datadiff between source and
-target, table by table — the engine-native replacement for the
-``rust-pgdatadiff`` delegation (cdc_operator.rs:255-293).
+target — the engine-native replacement for the ``rust-pgdatadiff``
+delegation (cdc_operator.rs:255-293).
 
 Each table gets V1 (count) + V2 (chunked hash, resumable) and an
 optional V3 drill-down; sources are anything Spark reads (parquet
 state dirs here, ``spark.read.jdbc`` frames against live databases).
+Tables run concurrently through the same per-table fan-out as
+``snapshot`` (:func:`fanout.per_table`): each table is ~11 small Spark
+jobs, and another table's jobs use the cores while one waits on
+planning and job latency. A failing table does not stop the others.
 """
 
 from __future__ import annotations
@@ -14,6 +18,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from rust_dms_cdc_operator_spark.fanout import NUM_OF_BUFFERS, PartialFailure, per_table
 from rust_dms_cdc_operator_spark.operators.diff import (
     chunked_hash_diff,
     count_diff,
@@ -23,6 +28,14 @@ from rust_dms_cdc_operator_spark.payloads import CdcValidatePayload
 
 
 MAX_REPORTED_CHUNKS = 1024
+
+
+class ValidatePartialFailure(PartialFailure):
+    """One or more tables failed to validate while the rest finished.
+    ``results`` holds the finished table → :class:`TableReport` map,
+    ``failures`` the per-table exceptions."""
+
+    finished = "validated"
 
 
 @dataclass
@@ -69,25 +82,43 @@ def validate_table(
     )
 
 
+def tables_in_flight(max_connections: int, n_tables: int) -> int:
+    """How many tables ``validate`` runs at once: snapshot's default
+    width, capped by the table count and by the payload's connection
+    pool size (each table in flight holds at least one source
+    connection, as in the reference's pool)."""
+    return max(1, min(NUM_OF_BUFFERS, n_tables, max_connections))
+
+
 def validate(
     spark: SparkSession,
     payload: CdcValidatePayload,
     tables: dict[str, tuple[DataFrame, DataFrame, list[str]]],
 ) -> dict[str, TableReport]:
     """Validate every table: name → (source_df, target_df, pk_cols).
-    Table include/exclude follows the payload (V4)."""
+    Table include/exclude follows the payload (V4). Returns name →
+    report in sorted name order; if any table fails, the others still
+    finish and :class:`ValidatePartialFailure` carries their reports
+    and the per-table exceptions."""
     names = sorted(tables)
     if payload.included_tables:
         names = [t for t in names if t in set(payload.included_tables)]
     elif payload.excluded_tables:
         names = [t for t in names if t not in set(payload.excluded_tables)]
-    out: dict[str, TableReport] = {}
-    for name in names:
+
+    def one_table(name: str) -> TableReport:
         src, tgt, pk = tables[name]
-        out[name] = validate_table(
+        return validate_table(
             src, tgt, name, pk, payload.chunk_size, payload.start_position
         )
-    return out
+
+    reports, failures = per_table(
+        spark, names, one_table,
+        tables_in_flight(payload.max_connections, len(names)),
+    )
+    if failures:
+        raise ValidatePartialFailure(reports, failures)
+    return reports
 
 
 def drill_down(

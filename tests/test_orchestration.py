@@ -5,6 +5,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from rust_dms_cdc_operator_spark.cli import main as cli_main
 from rust_dms_cdc_operator_spark.payloads import (
     CdcSnapshotPayload,
@@ -139,7 +141,8 @@ def test_snapshot_over_file_uri_matches_local(spark, tmp_path):
         assert a == b, t
 
 
-def test_validate_reports(spark, tmp_path):
+def _validate_sides(spark, tmp_path) -> dict:
+    """Snapshot the fixtures; each table's state as both validate sides."""
     root, tgt = str(tmp_path / "drop"), str(tmp_path / "state")
     fx = _drop(root)
     payload = CdcSnapshotPayload(
@@ -149,31 +152,142 @@ def test_validate_reports(spark, tmp_path):
     )
     pks = {t: f["pk"] for t, f in fx.items()}
     written = snapshot(spark, payload, ParquetTarget(tgt), root, pks)
+    return {
+        t: (spark.read.parquet(p), spark.read.parquet(p), pks[t])
+        for t, p in written.items()
+    }
 
-    cust = spark.read.parquet(written["customers_cdc"])
-    # identical → clean report
-    rep = validate(
-        spark,
-        CdcValidatePayload(schema_name="public", chunk_size=50),
-        {"customers_cdc": (cust, cust, ["id"])},
-    )["customers_cdc"]
-    assert rep.ok and rep.counts_match
 
-    # corrupt one row → count matches, chunks don't; drill-down finds it
+def test_validate_reports(spark, tmp_path):
+    """Several tables validated concurrently, one tampered: every
+    report equals the table's own ``validate_table`` result, keys come
+    back in sorted order, and include/exclude pick the tables."""
     from pyspark.sql import functions as F
 
+    from rust_dms_cdc_operator_spark.validate import validate_table
+
+    tables = _validate_sides(spark, tmp_path)
+    cust = tables["customers_cdc"][0]
+    # corrupt one row → count matches, chunks don't; drill-down finds it
     bad = cust.withColumn(
         "name", F.when(F.col("id") == 5, "TAMPERED").otherwise(F.col("name"))
     )
-    rep2 = validate(
-        spark,
-        CdcValidatePayload(schema_name="public", chunk_size=50),
-        {"customers_cdc": (cust, bad, ["id"])},
-    )["customers_cdc"]
-    assert rep2.counts_match and not rep2.ok
-    assert len(rep2.mismatched_chunks) == 1
+    tables["customers_cdc"] = (cust, bad, ["id"])
+
+    reports = validate(
+        spark, CdcValidatePayload(schema_name="public", chunk_size=50), tables
+    )
+    assert list(reports) == sorted(tables)
+    for t, (src, tgt, pk) in tables.items():
+        assert reports[t] == validate_table(src, tgt, t, pk, 50), t
+    assert all(reports[t].ok for t in ("geo_cdc", "orders_cdc"))
+    rep = reports["customers_cdc"]
+    assert rep.counts_match and not rep.ok
+    assert len(rep.mismatched_chunks) == 1
     rows = drill_down(cust, bad, ["id"]).collect()
     assert [(r.id, r.diff_status) for r in rows] == [(5, "different")]
+
+    inc = validate(spark, CdcValidatePayload(
+        schema_name="public", chunk_size=50,
+        included_tables=["orders_cdc", "customers_cdc"],
+    ), tables)
+    assert list(inc) == ["customers_cdc", "orders_cdc"]
+    exc = validate(spark, CdcValidatePayload(
+        schema_name="public", chunk_size=50, excluded_tables=["customers_cdc"],
+    ), tables)
+    assert list(exc) == ["geo_cdc", "orders_cdc"]
+    assert all(r.ok for r in exc.values())
+
+
+def test_validate_partial_failure_keeps_reports(spark, tmp_path):
+    """A source frame that fails only when its jobs run: the other
+    tables still validate, and the partial failure carries their
+    reports next to the failed table's exception."""
+    from pyspark.sql import functions as F
+
+    from rust_dms_cdc_operator_spark.validate import ValidatePartialFailure
+
+    tables = _validate_sides(spark, tmp_path)
+    src, tgt, pk = tables["orders_cdc"]
+    broken = src.where(
+        F.assert_true(F.col("order_id") < 0, "source unreadable").isNull()
+    )
+    tables["orders_cdc"] = (broken, tgt, pk)
+
+    with pytest.raises(ValidatePartialFailure) as exc_info:
+        validate(spark, CdcValidatePayload(schema_name="public"), tables)
+    err = exc_info.value
+    assert set(err.failures) == {"orders_cdc"}
+    assert "source unreadable" in str(err.failures["orders_cdc"])
+    assert list(err.results) == ["customers_cdc", "geo_cdc"]
+    assert all(r.ok for r in err.results.values())
+
+
+def test_cli_validate_partial_failure_exit_code(spark, tmp_path, capsys, monkeypatch):
+    """CLI surface of ValidatePartialFailure: the failed table is
+    reported on stderr and in the JSON, the finished reports stay in
+    the output, and the exit code is 1."""
+    from rust_dms_cdc_operator_spark import validate as validate_mod
+
+    real = validate_mod.validate_table
+
+    def flaky(source, target, table, *args, **kwargs):
+        if table == "geo_cdc":
+            raise RuntimeError("geo source went away")
+        return real(source, target, table, *args, **kwargs)
+
+    monkeypatch.setattr(validate_mod, "validate_table", flaky)
+    root, tgt = str(tmp_path / "drop"), str(tmp_path / "state")
+    fx = _drop(root)
+    rc = cli_main([
+        "validate",
+        "--local-root", root,
+        "--target-parquet-root", tgt,
+        "--database-name", cdc_fixtures.DB,
+        "--database-schema", cdc_fixtures.SCHEMA,
+        "--start-date", "2000-01-01",
+        "--primary-keys", json.dumps({t: f["pk"] for t, f in fx.items()}),
+    ])
+    assert rc == 1
+    captured = capsys.readouterr()
+    out = json.loads(captured.out)
+    assert set(out["snapshot"]) == set(fx)
+    assert set(out["validate"]) == {"customers_cdc", "orders_cdc"}
+    assert all(v["ok"] for v in out["validate"].values())
+    assert set(out["validate_failures"]) == {"geo_cdc"}
+    assert "validate of table geo_cdc failed: geo source went away" in captured.err
+
+
+def test_snapshot_jobs_join_callers_job_group(spark, tmp_path):
+    """The fan-out's worker threads inherit the caller's Spark local
+    properties: with a job group set, every job a multi-table snapshot
+    runs belongs to that group, none runs ungrouped."""
+    sc = spark.sparkContext
+    root, tgt = str(tmp_path / "drop"), str(tmp_path / "state")
+    fx = _drop(root)
+    payload = CdcSnapshotPayload(
+        bucket_name="local", schema_name=cdc_fixtures.SCHEMA,
+        database_name=cdc_fixtures.DB, mode=LoadMode.DATE_AWARE,
+        start_date="2000-01-01",
+    )
+    tracker, bus = sc.statusTracker(), sc._jsc.sc().listenerBus()
+    group = f"caller-{tmp_path.name}"
+    bus.waitUntilEmpty()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup(group, "snapshot under a caller's job group")
+    try:
+        written = snapshot(
+            spark, payload, ParquetTarget(tgt), root,
+            {t: f["pk"] for t, f in fx.items()},
+        )
+    finally:
+        for prop in ("spark.jobGroup.id", "spark.job.description",
+                     "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(prop, None)
+    bus.waitUntilEmpty()
+    assert set(written) == set(fx)
+    assert len(tracker.getJobIdsForGroup(group)) >= len(fx)
+    assert not set(tracker.getJobIdsForGroup(None)) - ungrouped
 
 
 def test_cli_end_to_end(spark, tmp_path, capsys):
@@ -504,6 +618,76 @@ def test_resume_snapshot_incremental(spark, tmp_path):
             for r in spark.read.parquet(f"{tgt_inc}/{cdc_fixtures.SCHEMA}/{t}").collect()
         }
         assert got == want, t
+
+
+def test_resume_snapshot_partial_failure_keeps_old_state(spark, tmp_path):
+    """One table's new CDC file is unreadable: the other table still
+    merges and commits, the failure names the broken table, and the
+    broken table's previous live state stays readable."""
+    import calendar
+    import os
+    from datetime import datetime
+
+    from rust_dms_cdc_operator_spark.snapshot import (
+        SnapshotPartialFailure,
+        resume_snapshot,
+    )
+
+    root, tgt_full, tgt_inc = (
+        str(tmp_path / "drop"), str(tmp_path / "full"), str(tmp_path / "inc")
+    )
+    fx = _drop(root)
+    pks = {t: f["pk"] for t, f in fx.items()}
+    bad = os.path.join(
+        root, cdc_fixtures.DB, cdc_fixtures.SCHEMA, "orders_cdc",
+        "2026", "08", "02", "20260802-100000000.parquet",
+    )
+    os.makedirs(os.path.dirname(bad))
+    with open(bad, "wb") as f:
+        f.write(b"this is not parquet")
+
+    def _epoch(y):
+        return calendar.timegm(datetime(y, 1, 1).timetuple())
+
+    old, new = _epoch(2001), _epoch(2003)
+    for dirpath, _dn, names in os.walk(root):
+        for n in names:
+            p = os.path.join(dirpath, n)
+            ts = new if "/2026/08/02/" in p.replace(os.sep, "/") else old
+            os.utime(p, (ts, ts))
+
+    base = dict(
+        bucket_name="local",
+        schema_name=cdc_fixtures.SCHEMA,
+        database_name=cdc_fixtures.DB,
+        mode=LoadMode.DATE_AWARE,
+        start_date="2000-01-01",
+    )
+    full = snapshot(
+        spark, CdcSnapshotPayload(**base, included_tables=["customers_cdc"]),
+        ParquetTarget(tgt_full), root, pks,
+    )
+    snapshot(
+        spark, CdcSnapshotPayload(**base, stop_date="2002-01-01"),
+        ParquetTarget(tgt_inc), root, pks,
+    )
+    orders_path = os.path.join(tgt_inc, cdc_fixtures.SCHEMA, "orders_cdc")
+    orders_before = sorted(str(r) for r in spark.read.parquet(orders_path).collect())
+
+    with pytest.raises(SnapshotPartialFailure) as exc_info:
+        resume_snapshot(
+            spark, CdcSnapshotPayload(**base), ParquetTarget(tgt_inc), root,
+            pks, since="2002-01-01",
+        )
+    err = exc_info.value
+    assert set(err.failures) == {"orders_cdc"}
+    assert set(err.results) == {"customers_cdc"}
+    got = sorted(str(r) for r in spark.read.parquet(err.results["customers_cdc"]).collect())
+    want = sorted(str(r) for r in spark.read.parquet(full["customers_cdc"]).collect())
+    assert got == want
+    assert sorted(
+        str(r) for r in spark.read.parquet(orders_path).collect()
+    ) == orders_before
 
 
 def test_cdc_engine_facade(spark, tmp_path):
